@@ -436,9 +436,10 @@ def q_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The wave-incremental dedup chain — the per-wave shape
-    ``jobs/dedup_job.py`` runs against a growing corpus: verbatim-row
-    collapse → intra-wave exact dedup (min-id keeper per fingerprint) →
+    """The wave-incremental dedup chain — ``plans.dedup_pipeline.
+    wave_incremental_dedup``, the same plan ``jobs/dedup_job.py`` runs per
+    wave against a growing corpus: verbatim-row collapse → intra-wave
+    exact dedup (min-id keeper per fingerprint) →
     Bloom-pruned exact verification against the corpus (bit-identical to
     a plain fingerprint anti-join, which is exactly how the oracle
     replays it) → bootstrap ``incremental_fuzzy_dedup`` (MinHash bands
@@ -462,12 +463,8 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     training_prep_fuzzy (fingerprint row_number, exact anti-join,
     minhash/band/Jaccard, recursive-CTE closure) plus the corpus-wins
     cluster rule."""
-    from readability_php_spark.operators.bloom import (
-        bloom_incremental_exact_dedup,
-    )
-    from readability_php_spark.operators.dedup import (
-        exact_dedup,
-        incremental_fuzzy_dedup,
+    from readability_php_spark.plans.dedup_pipeline import (
+        wave_incremental_dedup,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -500,34 +497,11 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    # stage checkpoints mirror jobs/dedup_job.py: without them the
-    # union+dropDuplicates wave lineage (and the bloom probe chain)
-    # replays inside every downstream consumer.  `intra` lost its
-    # checkpoint in the optimization round — it feeds only the bloom
-    # chain, and folding it in measured ~1.5 s faster; the other two
-    # are load-bearing (replacing them with lazy persists measured
-    # 7.5-9.9 s → 16-25 s, so they stay).
-    wave = wave.dropDuplicates(["doc_id", "text"]).localCheckpoint()
-    intra = exact_dedup(wave, id_col="doc_id")
-    after_exact = (
-        bloom_incremental_exact_dedup(
-            intra, corpus, m_bits=1 << 16, k=5, id_col="doc_id"
-        )
-        .filter(~F.col("is_dup"))
-        .drop("bloom_candidate", "is_dup")
-        .localCheckpoint()
+    dedup = wave_incremental_dedup(
+        wave, corpus, id_col="doc_id", bloom=(1 << 16, 5),
+        fuzzy=dict(num_hashes=8, bands=2, shingle_n=3, threshold=0.8),
     )
-    kept, bands = incremental_fuzzy_dedup(
-        after_exact,
-        corpus,
-        id_col="doc_id",
-        num_hashes=8,
-        bands=2,
-        shingle_n=3,
-        threshold=0.8,
-        corpus_bands=None,
-    )
-    sig = bands.groupBy("doc_id").agg(F.count("*").alias("n"))
+    sig = dedup.append_bands.groupBy("doc_id").agg(F.count("*").alias("n"))
     out_corpus = corpus.select("doc_id").join(sig, "doc_id", "left").select(
         "doc_id",
         F.lit("corpus").alias("source"),
@@ -535,9 +509,9 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n", F.lit(0)).cast("long").alias("n_sig_rows"),
     )
     out_wave = (
-        wave.select("doc_id")
+        dedup.wave.select("doc_id")
         .join(
-            kept.select("doc_id").withColumn("k", F.lit(True)),
+            dedup.kept.select("doc_id").withColumn("k", F.lit(True)),
             "doc_id",
             "left",
         )

@@ -2,7 +2,9 @@
 that duplicate an already-ingested corpus — without re-processing the
 corpus per wave.
 
-Two stages, each per-wave-sized:
+The chain itself is ``readability_php_spark.plans.dedup_pipeline.
+wave_incremental_dedup`` — the same plan function the ``incremental_dedup``
+oracle gate runs.  Two stages, each per-wave-sized:
 
 - **exact** (default on): intra-wave exact dedup (min-id keeper per
   fingerprint), then Bloom-pruned verification against the corpus —
@@ -63,15 +65,10 @@ def main() -> None:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
-    from readability_php_spark.operators.bloom import (
-        bloom_incremental_exact_dedup,
-        optimal_params,
-    )
-    from readability_php_spark.operators.dedup import (
-        exact_dedup,
-        incremental_fuzzy_dedup,
+    from readability_php_spark.operators.bloom import optimal_params
+    from readability_php_spark.plans.dedup_pipeline import (
+        wave_incremental_dedup,
     )
 
     builder = SparkSession.builder.appName("wave-incremental-dedup")
@@ -83,35 +80,14 @@ def main() -> None:
     corpus = spark.read.parquet(args.corpus)
     metrics = {"wave_in": wave.count()}
 
-    # verbatim duplicate ROWS (same id, same text — crash-retry double
-    # ingestion) collapse first: the downstream keepers are keyed per
-    # (id, fingerprint) and would otherwise pass both physical copies
-    kept = wave.dropDuplicates([args.id_col, args.text_col])
+    bloom = None
     if not args.no_exact:
-        # intra-wave: min-id keeper per fingerprint; checkpoint so the
-        # count and the bloom stage don't recompute the wave lineage
-        kept = exact_dedup(
-            kept, text_col=args.text_col, id_col=args.id_col
-        ).localCheckpoint()
-        metrics["after_intra_exact"] = kept.count()
         # one-column corpus count sizes the filter for the design FP rate
         n_corpus = corpus.count()
-        m_bits, k = optimal_params(max(n_corpus, 1), args.bloom_fp)
-        metrics["bloom_bits"], metrics["bloom_hashes"] = m_bits, k
-        # per-ROW verdicts ride the operator's output — no id rejoin
-        # (an id repeated with two texts gets two independent verdicts)
-        kept = (
-            bloom_incremental_exact_dedup(
-                kept, corpus, m_bits=m_bits, k=k,
-                text_col=args.text_col, id_col=args.id_col,
-            )
-            .filter(~F.col("is_dup"))
-            .drop("bloom_candidate", "is_dup")
-            .localCheckpoint()
-        )
-        metrics["after_exact"] = kept.count()
+        bloom = optimal_params(max(n_corpus, 1), args.bloom_fp)
+        metrics["bloom_bits"], metrics["bloom_hashes"] = bloom
 
-    append_bands = None
+    fuzzy = None
     if args.fuzzy:
         corpus_bands = None
         if args.signature_table:
@@ -125,24 +101,30 @@ def main() -> None:
             )
 
             corpus_bands = _try_read_parquet(spark, args.signature_table)
-        kept, append_bands = incremental_fuzzy_dedup(
-            kept, corpus,
-            text_col=args.text_col, id_col=args.id_col,
+        fuzzy = dict(
             num_hashes=args.num_hashes, bands=args.bands,
             shingle_n=args.shingle_n, threshold=args.fuzzy_threshold,
             corpus_bands=corpus_bands,
         )
 
-    kept.write.mode("overwrite").parquet(args.output)
+    stages = wave_incremental_dedup(
+        wave, corpus, id_col=args.id_col, text_col=args.text_col,
+        bloom=bloom, fuzzy=fuzzy,
+    )
+    if bloom is not None:
+        metrics["after_intra_exact"] = stages.intra.count()
+        metrics["after_exact"] = stages.after_exact.count()
+
+    stages.kept.write.mode("overwrite").parquet(args.output)
     metrics["kept"] = spark.read.parquet(args.output).count()
     if args.fuzzy:
         metrics["after_fuzzy"] = metrics["kept"]
-    if append_bands is not None and args.signature_table:
+    if stages.append_bands is not None and args.signature_table:
         # bands commit AFTER the output: a crash between the two leaves
         # the benign state (output committed, bands missing — the next
         # run at worst re-verifies) instead of a signature table
         # polluted with duplicate rows for a wave that never shipped
-        append_bands.write.mode("append").parquet(args.signature_table)
+        stages.append_bands.write.mode("append").parquet(args.signature_table)
     print("dedup done: " + json.dumps(metrics, sort_keys=True))
 
 

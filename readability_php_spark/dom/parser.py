@@ -29,6 +29,7 @@ from html import unescape
 from html.parser import HTMLParser
 from typing import Optional
 
+from ..memo import BoundedMemo
 from .node import Comment, Document, Element, Text
 
 # Fast start-tag scanner (hot path — ~40% of kernel time is tokenization).
@@ -50,28 +51,9 @@ _FAST_ATTR_OR_END = re.compile(
 _FAST_ENDTAG = re.compile(r"</([a-zA-Z][a-zA-Z0-9:._-]*)\s*>")
 
 #: verbatim start-tag memo (see TreeBuilder.parse_starttag): raw bytes up
-#: to the first '>' → (tag, attrs tuple, startend); cleared at entry cap
-#: AND at a key-byte budget — keys run up to 4 KB, so an entry cap alone
-#: would let an adversarial corpus of distinct near-4KB tags pin ~1 GB per
-#: long-lived worker; the byte budget bounds worst-case resident memory at
-#: tens of MB (values are the same order as their keys)
-_TAG_CACHE: dict = {}
-_TAG_CACHE_BYTES = 0
-_TAG_CACHE_BYTE_CAP = 16 * 1024 * 1024
-
-
-def _tag_cache_put(raw_tag: str, entry: tuple) -> None:
-    global _TAG_CACHE_BYTES
-    if len(_TAG_CACHE) >= 200_000 or _TAG_CACHE_BYTES >= _TAG_CACHE_BYTE_CAP:
-        _TAG_CACHE.clear()
-        _TAG_CACHE_BYTES = 0
-    _TAG_CACHE[raw_tag] = entry
-    # len() counts code points; non-ASCII keys occupy up to 4 bytes each
-    # (both UTF-8 and PyUnicode storage), so charge the real byte size —
-    # ASCII (the overwhelmingly common case) skips the encode
-    _TAG_CACHE_BYTES += (
-        len(raw_tag) if raw_tag.isascii() else len(raw_tag.encode())
-    )
+#: to the first '>' → (tag, attrs tuple, startend, attrs dict); only tags
+#: of 25-4097 characters are ever sliced and offered to it
+_TAG_CACHE = BoundedMemo(200_000, max_key=4097)
 
 # Open-element stack depth cap: beyond this, new elements are inserted as
 # leaves (immediately closed).  Bounds every stack scan on adversarial input.
@@ -226,7 +208,7 @@ class TreeBuilder(HTMLParser):
             tag = tag.lower()
             end = m.end()  # match() anchored at i+1 → end is absolute
             if raw_tag is not None and end == gt + 1:
-                _tag_cache_put(raw_tag, (tag, (), bool(term), {}))
+                _TAG_CACHE.put(raw_tag, (tag, (), bool(term), {}))
             self.lasttag = tag
             if term:
                 self.handle_startendtag(tag, [])
@@ -264,7 +246,7 @@ class TreeBuilder(HTMLParser):
             for n, v in attrs:
                 if n not in d:
                     d[n] = v if v is not None else n
-            _tag_cache_put(raw_tag, (tag, tuple(attrs), startend, d))
+            _TAG_CACHE.put(raw_tag, (tag, tuple(attrs), startend, d))
         self.lasttag = tag
         if startend:
             self.handle_startendtag(tag, attrs)

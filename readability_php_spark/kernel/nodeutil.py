@@ -19,7 +19,8 @@ from __future__ import annotations
 from typing import Callable, Iterator, Optional, Union
 
 from ..dom import node as _node_mod
-from ..dom.node import ELEMENT_NODE, TEXT_NODE, Element, Node, Text
+from ..dom.node import ELEMENT_NODE, TEXT_NODE, Element, Node
+from ..memo import BoundedMemo
 from .regexes import REGEXPS
 
 #: PHP trim() default character list (" \t\n\r\0\x0B") — NOT Unicode-aware;
@@ -70,37 +71,20 @@ def initialize_node(node: Element, weight_classes: bool) -> Element:
 #: class/id attribute values repeat heavily (template markup, and the bench
 #: corpus replicates fixture pages), so the ±25 classification of a string
 #: is memoized — a pure function of the string, identical output to the
-#: regex pair, bounded by the entry cap and a key-byte budget (keys up to
-#: 4 KB x 100k entries would otherwise pin ~400 MB per long-lived worker)
-_WEIGHT_CACHE: dict = {}
-_WEIGHT_BYTES = 0
-_WEIGHT_BYTE_CAP = 16 * 1024 * 1024
+#: regex pair (policy: readability_php_spark/memo.py)
+_WEIGHT_CACHE = BoundedMemo(100_000, max_key=4096)
 
 
 def _string_weight(s: str) -> int:
-    if len(s) > 4096:  # pathological keys: compute, don't pin memory
-        w = 0
-        if php_trim(s):
-            if REGEXPS["negative"].search(s):
-                w -= 25
-            if REGEXPS["positive"].search(s):
-                w += 25
-        return w
     w = _WEIGHT_CACHE.get(s)
     if w is None:
-        global _WEIGHT_BYTES
-        if len(_WEIGHT_CACHE) >= 100_000 or _WEIGHT_BYTES >= _WEIGHT_BYTE_CAP:
-            _WEIGHT_CACHE.clear()
-            _WEIGHT_BYTES = 0
         w = 0
         if php_trim(s):
             if REGEXPS["negative"].search(s):
                 w -= 25
             if REGEXPS["positive"].search(s):
                 w += 25
-        _WEIGHT_CACHE[s] = w
-        # real byte size for non-ASCII keys (len() counts code points)
-        _WEIGHT_BYTES += len(s) if s.isascii() else len(s.encode())
+        _WEIGHT_CACHE.put(s, w)
     return w
 
 
@@ -476,12 +460,3 @@ def count_desc(root: Element, tags: tuple) -> dict:
                 continue
         n = n.next
     return counts
-
-
-def create_node(original: Node, tag: str) -> Element:
-    # NodeTrait.php:370-381 — new element carrying the text content
-    el = Element(tag)
-    text = get_text_content(original)
-    if text:
-        el.append_child(Text(text))
-    return el

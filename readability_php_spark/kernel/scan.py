@@ -11,6 +11,7 @@ from __future__ import annotations
 from typing import Optional
 
 from ..dom.node import COMMENT_NODE, ELEMENT_NODE, Element, Node
+from ..memo import BoundedMemo
 from .nodeutil import (
     php_trim,
     filter_text_nodes,
@@ -65,65 +66,30 @@ def check_byline(ctx, node: Node, match_string: str) -> bool:
 
 # class+id match strings repeat heavily across nodes and documents
 # (template markup; the bench corpus replicates fixture pages), so the
-# three per-node regex classifications are memoized per string — pure
-# functions of their input, byte-identical outcomes, cleared at the entry
-# cap AND at a key-byte budget (a corpus of distinct multi-KB match
-# strings under the per-key bound would otherwise pin entry_cap x 4 KB =
-# ~400 MB per long-lived worker; the budget caps it at tens of MB)
-_BYLINE_CACHE: dict = {}
-_BYLINE_BYTES = 0
-_F4_CACHE: dict = {}
-_F4_BYTES = 0
-_MEMO_BYTE_CAP = 16 * 1024 * 1024
-
-
-#: per-key length bound: pathological pages with multi-KB unique class/id
-#: strings compute directly instead of pinning entry_cap x key_size bytes
-_MEMO_MAX_KEY = 4096
+# per-node regex classifications are memoized per string — pure functions
+# of their input, byte-identical outcomes (policy: readability_php_spark/
+# memo.py)
+_BYLINE_CACHE = BoundedMemo(100_000, max_key=4096)
+_F4_CACHE = BoundedMemo(100_000, max_key=4096)
 
 
 def _byline_hit(match_string: str) -> bool:
-    if len(match_string) > _MEMO_MAX_KEY:
-        return REGEXPS["byline"].search(match_string) is not None
     v = _BYLINE_CACHE.get(match_string)
     if v is None:
-        global _BYLINE_BYTES
-        if len(_BYLINE_CACHE) >= 100_000 or _BYLINE_BYTES >= _MEMO_BYTE_CAP:
-            _BYLINE_CACHE.clear()
-            _BYLINE_BYTES = 0
-        v = REGEXPS["byline"].search(match_string) is not None
-        _BYLINE_CACHE[match_string] = v
-        # real byte size for non-ASCII keys (len() counts code points)
-        _BYLINE_BYTES += (
-            len(match_string)
-            if match_string.isascii()
-            else len(match_string.encode())
+        v = _BYLINE_CACHE.put(
+            match_string, REGEXPS["byline"].search(match_string) is not None
         )
     return v
 
 
 def _f4_unlikely(match_string: str) -> bool:
     """unlikelyCandidates AND NOT okMaybeItsACandidate, memoized."""
-    if len(match_string) > _MEMO_MAX_KEY:
-        return (
-            REGEXPS["unlikelyCandidates"].search(match_string) is not None
-            and REGEXPS["okMaybeItsACandidate"].search(match_string) is None
-        )
     v = _F4_CACHE.get(match_string)
     if v is None:
-        global _F4_BYTES
-        if len(_F4_CACHE) >= 100_000 or _F4_BYTES >= _MEMO_BYTE_CAP:
-            _F4_CACHE.clear()
-            _F4_BYTES = 0
-        v = (
+        v = _F4_CACHE.put(
+            match_string,
             REGEXPS["unlikelyCandidates"].search(match_string) is not None
-            and REGEXPS["okMaybeItsACandidate"].search(match_string) is None
-        )
-        _F4_CACHE[match_string] = v
-        _F4_BYTES += (
-            len(match_string)
-            if match_string.isascii()
-            else len(match_string.encode())
+            and REGEXPS["okMaybeItsACandidate"].search(match_string) is None,
         )
     return v
 

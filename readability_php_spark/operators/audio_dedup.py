@@ -127,6 +127,17 @@ def _fingerprint_pcm(
             f"audio too short: {n_frames} frames < {_MIN_FRAMES} "
             f"(need ≥ {frame + (_MIN_FRAMES - 1) * hop} samples)"
         )
+    # the band ladder's precondition, checked before any windowing or FFT
+    # work: below ~606 Hz sample rate the usable ceiling min(_F_HI,
+    # nyquist*0.99) drops UNDER _F_LO and geomspace would emit a
+    # descending (non-monotone-binnable) ladder — such absurd-rate audio
+    # must surface as an error row, not collide into a degenerate
+    # fingerprint
+    if sr / 2.0 * 0.99 <= _F_LO:
+        raise ValueError(
+            f"sample rate {sr} Hz too low: the {_F_LO:.0f}-{_F_HI:.0f} Hz "
+            "band ladder needs a usable nyquist above its floor"
+        )
     # stride view, not fancy indexing: no n_frames×frame int64 index
     # matrix and no gathered copy — the only materialized
     # (n_frames, frame) array is the windowed product below
@@ -135,17 +146,7 @@ def _fingerprint_pcm(
     spec = _np.abs(_np.fft.rfft(frames, axis=1)) ** 2  # (n_frames, frame//2+1)
     # log-spaced band edges in Hz → rfft bin indices (monotone by
     # construction; duplicate edges at tiny frame sizes collapse a band
-    # to zero energy, which is fine — its bits go constant).  Guard the
-    # construction's precondition: below ~606 Hz sample rate the usable
-    # ceiling min(_F_HI, nyquist*0.99) drops UNDER _F_LO and geomspace
-    # would emit a descending (non-monotone-binnable) ladder — such
-    # absurd-rate audio must surface as an error row, not collide into
-    # a degenerate fingerprint
-    if sr / 2.0 * 0.99 <= _F_LO:
-        raise ValueError(
-            f"sample rate {sr} Hz too low: the {_F_LO:.0f}-{_F_HI:.0f} Hz "
-            "band ladder needs a usable nyquist above its floor"
-        )
+    # to zero energy, which is fine — its bits go constant)
     edges_hz = _np.geomspace(_F_LO, min(_F_HI, sr / 2.0 * 0.99), _N_BANDS)
     bins = _np.clip((edges_hz / (sr / 2.0) * (spec.shape[1] - 1)).astype(int), 0, spec.shape[1] - 1)
     band_e = _np.stack(

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from .collect import collect_at_most
 from .text_analysis import fingerprint
 
 
@@ -206,12 +207,12 @@ def connected_components(
     collided).
 
     Strategy dispatch (optimization round; the BPE ``local``-merge shape):
-    the edge relation is first counted — when it fits under
-    ``local_max_edges`` (default :data:`DEFAULT_CC_LOCAL_MAX_EDGES`), the
-    edges are collected once and clustered with a driver-side union-find,
-    which replaces the O(log diameter) loop's ~2 Spark jobs per round
-    (shuffle joins + checkpoint + convergence aggregate) with exactly two
-    bounded jobs (count + collect).  Candidate-pair relations are small by
+    when the edge relation fits under ``local_max_edges`` (default
+    :data:`DEFAULT_CC_LOCAL_MAX_EDGES`; 0 forces the distributed loop),
+    :func:`collect_at_most` fetches it in one bounded job and a
+    driver-side union-find clusters it, which replaces the O(log
+    diameter) loop's ~2 Spark jobs per round (shuffle joins + checkpoint
+    + convergence aggregate).  Candidate-pair relations are small by
     construction — that is what LSH/banding is for — so production waves
     take this path too; a corpus whose verified-pair graph genuinely
     exceeds the ceiling falls through to the distributed loop unchanged.
@@ -239,25 +240,19 @@ def connected_components(
         # lineage above re-executes O(log diameter) times
         .persist()
     )
-    if local_max_edges:
-        # probe and fetch in ONE bounded job: limit(N+1).collect() never
-        # holds more than N+1 rows no matter how large the edge set is,
-        # and when the graph fits those rows ARE the full edge relation —
-        # no separate count pass
-        probe = edges.limit(local_max_edges + 1).collect()
-        if len(probe) <= local_max_edges:
-            id_type = edges.schema["a"].dataType
-            labels_map = _cc_local_labels([(r.a, r.b) for r in probe])
-            spark = pairs.sparkSession
-            out_schema = StructType([
-                StructField("doc_id", id_type, True),
-                StructField("cluster_id", id_type, True),
-            ])
-            out = spark.createDataFrame(
-                sorted(labels_map.items()), out_schema
-            )
-            edges.unpersist()
-            return out
+    rows = collect_at_most(edges, local_max_edges)
+    if rows is not None:
+        id_type = edges.schema["a"].dataType
+        labels_map = _cc_local_labels([(r.a, r.b) for r in rows])
+        out_schema = StructType([
+            StructField("doc_id", id_type, True),
+            StructField("cluster_id", id_type, True),
+        ])
+        out = pairs.sparkSession.createDataFrame(
+            sorted(labels_map.items()), out_schema
+        )
+        edges.unpersist()
+        return out
     labels = (
         edges.select(F.col("a").alias("doc_id"))
         .distinct()

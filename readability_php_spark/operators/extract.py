@@ -58,13 +58,12 @@ EXTRACT_SCHEMA = StructType([
 
 def make_extract_batches(
     config: Configuration,
-    url_aware_config: bool = True,
     carry: tuple[str, ...] = (),
 ):
-    """Returns the mapInPandas function.  ``url_aware_config``: substitute
-    each row's own url as OriginalURL so relative links absolutize against
-    the page's true location (the reference is single-doc and takes this via
-    config — src/Configuration.php:59; corpus-scale it must be per-row).
+    """Returns the mapInPandas function.  Each row's own url is substituted
+    as OriginalURL so relative links absolutize against the page's true
+    location (the reference is single-doc and takes this via config —
+    src/Configuration.php:59; corpus-scale it must be per-row).
     ``carry``: input columns echoed through unchanged (e.g. warc_ts for
     streaming watermarks)."""
 
@@ -79,11 +78,7 @@ def make_extract_batches(
                 url = urls.iat[i]
                 raw = htmls.iat[i]
                 nbytes = len(raw) if raw is not None else 0
-                cfg = (
-                    config.with_overrides(original_url=url)
-                    if url_aware_config and url
-                    else config
-                )
+                cfg = config.with_overrides(original_url=url) if url else config
                 t0 = time.perf_counter()
                 if raw is None:
                     res = kernel_extract("", cfg, url=url)

@@ -33,6 +33,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .collect import collect_at_most
+
 #: Edge-count ceiling for the driver-local PageRank strategy.  Host-level
 #: graphs are orders of magnitude smaller than their corpora (one node per
 #: HOST), so gate/bench graphs and many production host graphs fit; a real
@@ -127,17 +129,19 @@ def pagerank(
     if local_max_edges:
         # Strategy dispatch (optimization round; the CC/k-means shape):
         # a host graph under the ceiling is collected once and iterated
-        # driver-side — ONE bounded job (the limited collect doubles as
-        # the size probe) instead of 2 jobs (dangling scalar + checkpoint)
-        # per iteration.  persist() so an over-ceiling fallthrough doesn't
-        # run the (regex-extraction) edge lineage once per loop round.
+        # driver-side — ONE bounded job (collect_at_most) instead of 2
+        # jobs (dangling scalar + checkpoint) per iteration.  persist() so
+        # an over-ceiling fallthrough doesn't run the (regex-extraction)
+        # edge lineage once per loop round.
         e = e.persist()
-        probe = e.limit(local_max_edges + 1).collect()
-        if len(probe) <= local_max_edges:
-            rows = [(r.src, r.dst) for r in probe]
+        rows = collect_at_most(e, local_max_edges)
+        if rows is not None:
             e.unpersist()
             return edges.sparkSession.createDataFrame(
-                _pagerank_local(rows, iterations, damping, round_decimals),
+                _pagerank_local(
+                    [(r.src, r.dst) for r in rows],
+                    iterations, damping, round_decimals,
+                ),
                 "node string, rank double",
             )
     nodes = (

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .collect import collect_at_most
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -317,7 +319,6 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quantizer_method: str = "auto",
-    strategy: str = "auto",
     local_max_rows: "int | None" = None,
 ) -> DataFrame:
     """Deterministic Lloyd's k-means (IVF coarse quantizer).
@@ -330,13 +331,14 @@ def kmeans_centroids(
     k-way average.
 
     Strategy dispatch (optimization round; the BPE ``local``-merge shape):
-    ``auto`` counts the corpus and, when it fits under ``local_max_rows``
-    (default :data:`DEFAULT_KMEANS_LOCAL_MAX_ROWS`), collects the vectors
-    ONCE and runs the whole Lloyd loop driver-side (``_lloyd_local``) —
-    2 bounded jobs total instead of 2 Spark jobs per iteration.  This is
-    also the industrial shape: coarse quantizers train on a bounded sample
-    even when the corpus is 10^12 vectors.  ``strategy="distributed"``
-    forces the per-iteration Spark loop (differential-tested identical).
+    when the corpus fits under ``local_max_rows`` (default
+    :data:`DEFAULT_KMEANS_LOCAL_MAX_ROWS`), :func:`collect_at_most`
+    fetches the vectors in one bounded job and the whole Lloyd loop runs
+    driver-side (``_lloyd_local``) instead of 2 Spark jobs per iteration.
+    This is also the industrial shape: coarse quantizers train on a
+    bounded sample even when the corpus is 10^12 vectors.
+    ``local_max_rows=0`` forces the per-iteration Spark loop
+    (differential-tested identical).
 
     Means are rounded to 6 decimals per iteration: float64 sums over an
     unordered partition set are only reproducible to ~1e-13, and the coarse
@@ -346,33 +348,12 @@ def kmeans_centroids(
     oracle replay the exact same Lloyd trajectory."""
     if local_max_rows is None:
         local_max_rows = DEFAULT_KMEANS_LOCAL_MAX_ROWS
-    if strategy == "auto" and local_max_rows:
-        # probe and fetch in ONE bounded job: the limited collect never
-        # holds more than local_max_rows+1 rows, and when the corpus fits
-        # those rows ARE the training set — no separate count pass
-        probe = (
-            embeddings.select(id_col, vec_col)
-            .limit(local_max_rows + 1)
-            .collect()
-        )
-        if len(probe) <= local_max_rows:
-            rows = [(r[0], list(r[1])) for r in probe]
-            return embeddings.sparkSession.createDataFrame(
-                _lloyd_local(rows, k, iters), "cid int, cvec array<double>"
-            )
-        strategy = "distributed"
-    elif strategy == "auto":
-        strategy = "distributed"
-    if strategy == "local":
-        rows = [
-            (r[0], list(r[1]))
-            for r in embeddings.select(id_col, vec_col).collect()
-        ]
+    rows = collect_at_most(embeddings.select(id_col, vec_col), local_max_rows)
+    if rows is not None:
         return embeddings.sparkSession.createDataFrame(
-            _lloyd_local(rows, k, iters), "cid int, cvec array<double>"
+            _lloyd_local([(r[0], list(r[1])) for r in rows], k, iters),
+            "cid int, cvec array<double>",
         )
-    if strategy != "distributed":
-        raise ValueError(f"unknown kmeans strategy: {strategy!r}")
     # Lloyd re-reads the corpus once per iteration (assign + mean) plus the
     # init scan — persist for the loop's lifetime (standard k-means-training
     # shape; at 10^12 rows you'd train on a persisted sample instead).

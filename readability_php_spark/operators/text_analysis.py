@@ -55,54 +55,10 @@ def stopword_hits(text: Column, lang: str) -> Column:
     return F.regexp_count(F.lower(text), F.lit(pat))
 
 
-def quality_score(text: Column) -> Column:
-    """Deterministic quality heuristic in [0,1]:
-    0.4·min(len/2000,1) + 0.3·min(stopword_ratio·8,1) + 0.3·(1−punct_ratio·4 clamped).
-    Rounded to 4 decimals for cross-engine hash stability."""
-    n = F.length(text)
-    words = token_count(text)
-    stop = stopword_hits(text, "en")
-    punct = F.length(F.regexp_replace(text, r"[^!-/:-@\[-`{-~]", ""))
-    len_component = F.least(n / F.lit(2000.0), F.lit(1.0))
-    stop_ratio = F.when(words > 0, stop / words).otherwise(F.lit(0.0))
-    stop_component = F.least(stop_ratio * 8.0, F.lit(1.0))
-    punct_ratio = F.when(n > 0, punct / n).otherwise(F.lit(0.0))
-    punct_component = F.greatest(
-        F.lit(0.0), F.lit(1.0) - F.least(punct_ratio * 4.0, F.lit(1.0))
-    )
-    return F.round(
-        0.4 * len_component + 0.3 * stop_component + 0.3 * punct_component, 4
-    )
-
-
-def lang_id(text: Column) -> Column:
-    """Argmax of per-language stopword hits; 'und' when all zero.
-    Tie-break: LANG_STOPWORDS declaration order."""
-    hits = {lang: stopword_hits(text, lang) for lang in LANG_STOPWORDS}
-    best = F.greatest(*hits.values())
-    expr = F.lit("und")
-    # build reversed when-chain so earlier languages win ties
-    for lang in reversed(list(LANG_STOPWORDS)):
-        expr = F.when((hits[lang] == best) & (best > 0), F.lit(lang)).otherwise(expr)
-    return expr
-
-
 def fingerprint(text: Column) -> Column:
     """Document fingerprint: md5 of lowercase, whitespace-collapsed text.
     (md5 so DuckDB can reproduce it bit-for-bit.)"""
     return F.md5(F.lower(F.regexp_replace(F.trim(text), r"\s+", " ")))
-
-
-def rolling_fingerprints(text: Column, window: int = 64, stride: int = 32) -> Column:
-    """Array of windowed md5 fingerprints over the normalized text — the
-    near-dup 'rolling hash' shape; JVM-native via transform over a range."""
-    norm = F.lower(F.regexp_replace(F.trim(text), r"\s+", " "))
-    n = F.length(norm)
-    num = F.greatest(F.ceil((n - F.lit(window)) / F.lit(stride)) + 1, F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(0), num.cast("int") - 1),
-        lambda i: F.md5(F.substring(norm, (i * stride + 1).cast("int"), window)),
-    )
 
 
 def analyze(

@@ -161,8 +161,6 @@ def run_extract_job(
     snapshots: bool = True,  # commit a file-manifest snapshot per wave
     # (plans/snapshots.py) so readers can pin an as-of view of the output
     spread_skew: bool = False,  # opt-in input-side skew spreader, see below
-    # deprecated alias (kept for callers written against the shuffle design)
-    num_partitions: Optional[int] = None,
 ) -> ExtractJobResult:
     """The flagship job.  ``pages``: DataFrame with (url, html[, lang...]).
 
@@ -178,8 +176,6 @@ def run_extract_job(
     free.  Turn it on when task-duration skew, not total throughput, is
     the bottleneck."""
     tune_session_for_extraction(spark)
-    if num_partitions is not None:
-        num_buckets = num_partitions
     manifest_path = manifest_path or output_path.rstrip("/") + "_manifest"
     config = config or Configuration(
         fix_relative_urls=True, article_byline=True, substitute_entities=True

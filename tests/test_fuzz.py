@@ -5,7 +5,7 @@ error values.  These fuzz the parser/serializer/kernel with adversarial
 HTML-ish strings.
 """
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from readability_php_spark.config import Configuration
 from readability_php_spark.dom import parse_html, serialize
@@ -29,13 +29,26 @@ _fragment = st.one_of(
 _soup = st.lists(_fragment, max_size=40).map("".join)
 
 
+def _element_tree(doc):
+    return [(e.tag, sorted(e.attrs.items())) for e in doc.iter_desc()]
+
+
 @settings(max_examples=150, deadline=None)
 @given(_soup)
+@example("a &#60;b&#62; c")  # escaped markup in text must stay text
 def test_parse_never_raises(soup):
+    # parse and serialize never raise, and one serialize∘parse round
+    # reaches a fixpoint: re-parsing the output rebuilds the same element
+    # tree, and re-serializing it gives the same bytes — except inside
+    # <script>/<style>, whose raw text the serializer escapes and the
+    # parser keeps verbatim, so '<script><div></script>' gains one
+    # '&amp;' layer per round
     doc = parse_html(soup)
-    # serializer must also never raise, and must emit well-escaped text
-    out = serialize(doc, include_self=False)
-    assert "<" not in out.replace("</", "<x").replace("<", "", 0) or True
+    out = serialize(doc)
+    again = parse_html(out)
+    assert _element_tree(again) == _element_tree(doc)
+    if "<script" not in soup.lower() and "<style" not in soup.lower():
+        assert serialize(again) == out
 
 
 @settings(max_examples=100, deadline=None)

@@ -205,6 +205,24 @@ def test_connected_components_matches_union_find(spark):
     assert got == want
 
 
+def test_collect_at_most(spark):
+    """The one size probe of the size-adaptive operators: the rows when
+    there are at most n, None above n, and None for n == 0 (which forces
+    the distributed path)."""
+    from readability_php_spark.operators.collect import collect_at_most
+
+    def ids(rows):
+        return None if rows is None else sorted(r.id for r in rows)
+
+    n = 5
+    assert ids(collect_at_most(spark.range(0), n)) == []
+    assert ids(collect_at_most(spark.range(n), n)) == list(range(n))
+    assert collect_at_most(spark.range(n + 1), n) is None
+    assert collect_at_most(spark.range(1000), n) is None
+    assert collect_at_most(spark.range(0), 0) is None
+    assert collect_at_most(spark.range(3), 0) is None
+
+
 def test_connected_components_local_matches_distributed(spark):
     """Strategy differential: the driver-local union-find dispatch (edge
     count under the ceiling) and the distributed min-label loop
@@ -237,11 +255,12 @@ def test_connected_components_local_matches_distributed(spark):
 
 
 def test_kmeans_local_matches_distributed(spark):
-    """Strategy differential: the driver-local Lloyd (one bounded collect)
-    must reproduce the distributed per-iteration loop bit-for-bit — same
-    init, same ties-to-lower-cid assignment, same HALF_UP round-6 means —
-    including an empty-cell iteration (k > distinct points keeps the
-    previous centroid) and k > n."""
+    """Strategy differential: the driver-local Lloyd (one bounded collect;
+    local_max_rows at exactly the row count still takes it) must reproduce
+    the distributed per-iteration loop (local_max_rows=0 forces it)
+    bit-for-bit — same init, same ties-to-lower-cid assignment, same
+    HALF_UP round-6 means — including an empty-cell iteration (k >
+    distinct points keeps the previous centroid) and k > n."""
     from readability_php_spark.operators.similarity import kmeans_centroids
 
     rows = [
@@ -252,8 +271,8 @@ def test_kmeans_local_matches_distributed(spark):
     rows += [(100 + i, rows[i][1]) for i in range(8)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     for k, iters in ((4, 3), (16, 5), (64, 2)):
-        loc = kmeans_centroids(df, k, iters=iters, strategy="local")
-        dist = kmeans_centroids(df, k, iters=iters, strategy="distributed")
+        loc = kmeans_centroids(df, k, iters=iters, local_max_rows=len(rows))
+        dist = kmeans_centroids(df, k, iters=iters, local_max_rows=0)
         lc = sorted((r.cid, tuple(r.cvec)) for r in loc.collect())
         dc = sorted((r.cid, tuple(r.cvec)) for r in dist.collect())
         assert lc == dc, f"k={k} iters={iters}"
@@ -2109,6 +2128,19 @@ def _tone_wav(freqs, gain=1.0, n=32000, sr=16000, channels=1):
     if channels == 2:
         return pcm16_wav_bytes([v for s in mono for v in (s, s)], sr, channels=2)
     return pcm16_wav_bytes(mono, sr)
+
+
+def test_audio_low_sample_rate_rejected_before_fft(monkeypatch):
+    """The sample-rate guard runs before any windowing or FFT work: a
+    500 Hz WAV gets the sample-rate ValueError and the FFT never runs."""
+    from readability_php_spark.operators import audio_dedup
+
+    def no_fft(*args, **kwargs):
+        raise AssertionError("FFT ran before the sample-rate guard")
+
+    monkeypatch.setattr(audio_dedup._np.fft, "rfft", no_fft)
+    with pytest.raises(ValueError, match="sample rate"):
+        audio_dedup.audio_fingerprint(_tone_wav([100], n=6000, sr=500))
 
 
 def test_audio_fingerprint_invariances():
