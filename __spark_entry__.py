@@ -29,9 +29,16 @@ from readability_php_spark.operators.dedup import (  # noqa: E402
     minhash_lsh_candidates,
 )
 from readability_php_spark.operators.extract import extract_operator  # noqa: E402
+from readability_php_spark.operators.jpeg import encode_jpeg  # noqa: E402
 from readability_php_spark.operators.multimodal import (  # noqa: E402
+    MEDIA_SCHEMA,
+    decode_wav,
+    encode_gif,
+    encode_png,
     extract_media_features,
+    pcm16_wav_bytes,
 )
+from readability_php_spark.operators.rowmap import flat_map_rows, map_rows  # noqa: E402
 from readability_php_spark.operators.similarity import (  # noqa: E402
     ann_topk,
     cosine_topk,
@@ -616,15 +623,16 @@ def q_training_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_training_prep_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed dedup chain of run_training_prep (exact fingerprint
-    dedup → MinHash-LSH candidates → n-gram-Jaccard verification →
+    """The composed dedup chain of run_training_prep, through the same
+    ``exact_fuzzy_dedup`` call (exact fingerprint dedup → checkpoint →
+    MinHash-LSH candidates → n-gram-Jaccard verification →
     connected components → keep the min-id representative): planted exact
     dups must die in stage 1, planted near-dups (text + a few extra
     tokens) and the corpus's own natural near-dup clusters must collapse
     to one keeper in the fuzzy stage.  The oracle replays every stage —
     md5 fingerprints, the affine minhash family, band hashes, rounded
     Jaccard, and a recursive-CTE connected components."""
-    from readability_php_spark.operators.dedup import fuzzy_dedup
+    from readability_php_spark.plans.training_pipeline import exact_fuzzy_dedup
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").filter(
         F.col("doc_id") < 150
@@ -637,13 +645,8 @@ def q_training_prep_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 2_000_000).alias("doc_id"), "text"
     )
     corpus = docs.unionByName(near).unionByName(exact)
-    kept = fuzzy_dedup(
-        # the gate's corpus is ~350 rows built from a 3-branch union; the
-        # eager checkpoint materializes scan+union+exact-dedup ONCE so the
-        # fuzzy chain's 4 consumers (LSH input, both Jaccard sides, final
-        # anti-join) stop replaying that subtree per job
-        exact_dedup(corpus).localCheckpoint(), num_hashes=8, bands=2,
-        threshold=0.8
+    kept = exact_fuzzy_dedup(
+        corpus, id_col="doc_id", num_hashes=8, bands=2, threshold=0.8
     )
     return kept.select("doc_id").orderBy("doc_id")
 
@@ -901,37 +904,23 @@ def q_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     back with the REAL stdlib RIFF/WAVE parser, and emit per-doc audio
     stats; the oracle computes the same stats from the text directly, so
     equality proves the container encode→parse round trip."""
-    import pandas as pd
+    from pyspark.sql.types import StructType
 
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .filter((F.col("doc_id") < 200) & (F.length("text") > 0))
     )
+    schema = StructType.fromDDL(
+        "doc_id long, sample_rate long, channels long, n_samples long, rms double"
+    )
 
-    def batches(it):
-        from readability_php_spark.operators.multimodal import (
-            decode_wav,
-            pcm16_wav_bytes,
-        )
-
-        for pdf in it:
-            out = {"doc_id": [], "sample_rate": [], "channels": [],
-                   "n_samples": [], "rms": []}
-            for i in range(len(pdf)):
-                t = pdf["text"].iat[i]
-                samples = [min(ord(c), 32767) for c in t[:4096]]
-                sr, ch, n, rms = decode_wav(pcm16_wav_bytes(samples, 16000, 1))
-                out["doc_id"].append(pdf["doc_id"].iat[i])
-                out["sample_rate"].append(sr)
-                out["channels"].append(ch)
-                out["n_samples"].append(n)
-                out["rms"].append(rms)
-            yield pd.DataFrame(out)
+    def wav_row(doc_id, text):
+        samples = [min(ord(c), 32767) for c in text[:4096]]
+        return (doc_id, *decode_wav(pcm16_wav_bytes(samples, 16000, 1)))
 
     return docs.mapInPandas(
-        batches,
-        schema="doc_id long, sample_rate long, channels long, n_samples long, rms double",
+        map_rows(wav_row, schema, ("doc_id", "text")), schema=schema
     ).orderBy("doc_id")
 
 
@@ -1482,49 +1471,35 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     match therefore proves the pixel values came out of
     decode_png/decode_gif/decode_jpeg, not header or byte-length
     arithmetic."""
-    import pandas as pd
-
-    from readability_php_spark.operators.multimodal import MEDIA_SCHEMA
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .filter((F.col("doc_id") < 120) & (F.length("text") > 0))
     )
 
-    def batches(it):
-        from readability_php_spark.operators.jpeg import encode_jpeg
-        from readability_php_spark.operators.multimodal import (
-            encode_gif,
-            encode_png,
-        )
+    pal = bytes([10, 20, 30, 40, 50, 60, 70, 80, 90, 200, 210, 220])
 
-        pal = bytes([10, 20, 30, 40, 50, 60, 70, 80, 90, 200, 210, 220])
-        for pdf in it:
-            out = {"media_id": [], "kind": [], "payload": []}
-            for i in range(len(pdf)):
-                did = int(pdf["doc_id"].iat[i])
-                cps = [ord(ch) % 256 for ch in pdf["text"].iat[i][:48]]
-                L = len(cps)
-                sel = did % 3
-                if sel == 0:
-                    w, h = 4 + did % 5, 3 + did % 4
-                    pix = bytes(cps[j % L] for j in range(w * h * 3))
-                    payload = encode_png(w, h, pix, color_type=2)
-                elif sel == 1:
-                    w, h = 5 + did % 4, 4 + did % 3
-                    idx = bytes(cps[j % L] % 4 for j in range(w * h))
-                    payload = encode_gif(w, h, pal, idx)
-                else:
-                    v = (did * 7) % 256
-                    w, h = 9 + did % 8, 7 + did % 5
-                    payload = encode_jpeg(w, h, bytes([v]) * (w * h), channels=1)
-                out["media_id"].append(did)
-                out["kind"].append("image")
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
+    def media_row(did, text):
+        cps = [ord(ch) % 256 for ch in text[:48]]
+        L = len(cps)
+        sel = did % 3
+        if sel == 0:
+            w, h = 4 + did % 5, 3 + did % 4
+            pix = bytes(cps[j % L] for j in range(w * h * 3))
+            payload = encode_png(w, h, pix, color_type=2)
+        elif sel == 1:
+            w, h = 5 + did % 4, 4 + did % 3
+            idx = bytes(cps[j % L] % 4 for j in range(w * h))
+            payload = encode_gif(w, h, pal, idx)
+        else:
+            v = (did * 7) % 256
+            w, h = 9 + did % 8, 7 + did % 5
+            payload = encode_jpeg(w, h, bytes([v]) * (w * h), channels=1)
+        return did, "image", payload
 
-    media = docs.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    media = docs.mapInPandas(
+        map_rows(media_row, MEDIA_SCHEMA, ("doc_id", "text")), schema=MEDIA_SCHEMA
+    )
     fmt = F.element_at(
         F.array(F.lit("png"), F.lit("gif"), F.lit("jpeg")),
         (F.col("media_id") % 3).cast("int") + 1,
@@ -1550,10 +1525,7 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     perceptual hash actually discriminates.  doc_id is mixed into the
     pixels so exact-duplicate TEXTS still yield distinct pictures (text
     dedup is a different gate's job)."""
-    import pandas as pd
-
     from readability_php_spark.operators.image_dedup import phash_image_dedup
-    from readability_php_spark.operators.multimodal import MEDIA_SCHEMA
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -1561,39 +1533,29 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("doc_id") < 80) & (F.length("text") > 0))
     )
 
-    def batches(it):
-        from readability_php_spark.operators.jpeg import encode_jpeg
-        from readability_php_spark.operators.multimodal import (
-            encode_gif,
-            encode_png,
-        )
+    levels = [0, 85, 170, 255]
+    pal = bytes(v for v in levels for _ in range(3))
 
-        levels = [0, 85, 170, 255]
-        pal = bytes(v for v in levels for _ in range(3))
-        for pdf in it:
-            out = {"media_id": [], "kind": [], "payload": []}
-            for i in range(len(pdf)):
-                did = int(pdf["doc_id"].iat[i])
-                cps = [ord(ch) for ch in pdf["text"].iat[i][:64]] or [0]
-                L = len(cps)
-                w, h = 24 + did % 9, 20 + did % 7
-                vals = [
-                    levels[(cps[j % L] + did * 31 + j // L) % 4]
-                    for j in range(w * h)
-                ]
-                rgb = bytes(v for v in vals for _ in range(3))
-                payloads = [
-                    encode_png(w, h, rgb, color_type=2),
-                    encode_gif(w, h, pal, bytes(v >> 6 for v in vals)),
-                    encode_jpeg(w, h, bytes(vals), channels=1),
-                ]
-                for v_i, payload in enumerate(payloads):
-                    out["media_id"].append(did * 10 + v_i)
-                    out["kind"].append("image")
-                    out["payload"].append(payload)
-            yield pd.DataFrame(out)
+    def media_rows(did, text):
+        cps = [ord(ch) for ch in text[:64]] or [0]
+        L = len(cps)
+        w, h = 24 + did % 9, 20 + did % 7
+        vals = [
+            levels[(cps[j % L] + did * 31 + j // L) % 4]
+            for j in range(w * h)
+        ]
+        rgb = bytes(v for v in vals for _ in range(3))
+        payloads = [
+            encode_png(w, h, rgb, color_type=2),
+            encode_gif(w, h, pal, bytes(v >> 6 for v in vals)),
+            encode_jpeg(w, h, bytes(vals), channels=1),
+        ]
+        for v_i, payload in enumerate(payloads):
+            yield did * 10 + v_i, "image", payload
 
-    media = docs.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    media = docs.mapInPandas(
+        flat_map_rows(media_rows, MEDIA_SCHEMA, ("doc_id", "text")), schema=MEDIA_SCHEMA
+    )
     return (
         phash_image_dedup(media, max_hamming=6, blocks=8)
         .select("media_id", "keeper", "is_keeper")

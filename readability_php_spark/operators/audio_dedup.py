@@ -34,9 +34,6 @@ enter a shuffle.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -56,6 +53,7 @@ except ImportError:  # pragma: no cover
 from .dedup import connected_components
 from .image_dedup import phash_near_dup_candidates
 from .multimodal import wav_pcm16_chunks
+from .rowmap import map_rows
 
 #: band-edge frequency range (Hz): the Haitsma–Kalker paper's 300–2000 Hz
 #: band, widened to 3 kHz — still inside the 8 kHz Nyquist of even
@@ -186,34 +184,28 @@ def compute_audio_fingerprint(media: DataFrame) -> DataFrame:
     audio rows; failures follow the feature extractor's error-column
     contract (never a task kill)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {f.name: [] for f in AUDIO_FP_SCHEMA.fields}
-            for i in range(len(pdf)):
-                raw = pdf["payload"].iat[i]
-                raw = bytes(raw) if raw is not None else b""
-                err = None
-                afp = sr = dur = None
-                try:
-                    rate, pcm = _wav_pcm(raw)  # decode ONCE per payload
-                    afp = _fingerprint_pcm(rate, pcm)
-                    sr = rate
-                    dur = round(len(pcm) / rate, 3) if rate else None
-                except NotImplementedError:
-                    err = "decoder_unavailable"
-                except Exception as e:  # noqa: BLE001 — error-column contract
-                    err = f"fingerprint_error: {e}"
-                out["media_id"].append(pdf["media_id"].iat[i])
-                out["afp"].append(afp)
-                out["sample_rate"].append(sr)
-                out["duration_s"].append(dur)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
+    def fingerprint_row(media_id, raw) -> tuple:
+        raw = bytes(raw) if raw is not None else b""
+        err = None
+        afp = sr = dur = None
+        try:
+            rate, pcm = _wav_pcm(raw)  # decode ONCE per payload
+            afp = _fingerprint_pcm(rate, pcm)
+            sr = rate
+            dur = round(len(pcm) / rate, 3) if rate else None
+        except NotImplementedError:
+            err = "decoder_unavailable"
+        except Exception as e:  # noqa: BLE001 — error-column contract
+            err = f"fingerprint_error: {e}"
+        return media_id, afp, sr, dur, err
 
     return (
         media.filter(F.col("kind") == "audio")
         .select("media_id", "payload")
-        .mapInPandas(batches, schema=AUDIO_FP_SCHEMA)
+        .mapInPandas(
+            map_rows(fingerprint_row, AUDIO_FP_SCHEMA, ("media_id", "payload")),
+            schema=AUDIO_FP_SCHEMA,
+        )
     )
 
 

@@ -38,9 +38,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .collect import collect_at_most
+
 #: Sennrich's end-of-word marker: appended as one terminal symbol so
 #: merges distinguish word-final from word-internal contexts.
 END_OF_WORD = "</w>"
+
+#: most distinct words :func:`bpe_train` collects to run its merge loop
+#: driver-side; a larger vocabulary runs the per-merge Spark loop.  Set
+#: by driver memory, not speed: the local learner peaks at ~1 GB of
+#: driver Python memory per million words, and a default 1 GB driver
+#: heap held a 6M-row collect but not a 10M-row one
+BPE_LOCAL_MAX_WORDS = 5_000_000
 
 
 def _initial_symbols(
@@ -181,7 +190,6 @@ def bpe_train(
     text_col: str = "text",
     min_pair_count: int = 2,
     end_of_word: str = END_OF_WORD,
-    strategy: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """Train ``merges`` BPE merges on the corpus.  Returns
     ``(merge_table, encoded_vocab)``:
@@ -195,23 +203,24 @@ def bpe_train(
     Stops early when the best remaining pair occurs fewer than
     ``min_pair_count`` times (merging hapax pairs memorizes the corpus).
 
-    ``strategy`` picks where the merge LOOP runs; both produce the
-    identical greedy trajectory (differentially tested), and both train
-    on the distinct-words relation built by the one corpus-sized shuffle
-    of :func:`word_counts`:
+    Both merge loops below produce the identical greedy trajectory
+    (differentially tested), and both train on the distinct-words
+    relation built by the one corpus-sized shuffle of
+    :func:`word_counts`.  :func:`collect_at_most` picks between them:
 
-    - ``"local"`` (what ``"auto"`` resolves to): collect the
+    - up to :data:`BPE_LOCAL_MAX_WORDS` distinct words: collect the
       Heaps'-bounded (word, cnt) relation to the driver and run the
       classical incremental-update merge loop in memory — ONE Spark job
       for the whole training run, driver round-trips CONSTANT in the
       merge count.  This is the industrial shape (HuggingFace
       tokenizers, SentencePiece: distributed/streamed word counting, a
       local learner over the word-count table): at 100 TB the distinct
-      words are ~10^6-10^7 rows (Heaps' law) ≈ tens-to-hundreds of MB
-      driver-side, while a 64k-merge vocabulary under the per-merge
-      loop would be ~64k sequential vocabulary-sized Spark jobs —
-      days of pure scheduler latency no cluster size can buy down.
-    - ``"perjob"``: the fully-distributed per-merge loop (adjacent-pair
+      words are ~10^6-10^7 rows (Heaps' law) at ~1 GB of driver memory
+      per million words, while a 64k-merge vocabulary under the
+      per-merge loop would be ~64k sequential vocabulary-sized Spark
+      jobs — days of pure scheduler latency no cluster size can buy
+      down.
+    - above it: the fully-distributed per-merge loop (adjacent-pair
       explode → map-side-combined agg → ONE-row argmax collect → pure
       column-algebra fold, ``localCheckpoint`` per iteration).  One
       Spark job + one 1-row collect PER MERGE — the right envelope only
@@ -222,7 +231,7 @@ def bpe_train(
     — total, so the trajectory is reproducible cross-run and replayable
     relationally (the DuckDB gate unrolls this loop exactly like the
     logreg/pagerank/k-means oracles).  The pair tie-break compares UTF-8
-    BYTES (Python code-point order locally, ``F.encode`` in the perjob
+    BYTES (Python code-point order locally, ``F.encode`` in the per-merge
     argmax): Python code-point order, DuckDB's default binary collation,
     and UTF-8 byte order all agree, while Spark's native string
     comparison is UTF-16 code units — which sorts supplementary-plane
@@ -232,19 +241,17 @@ def bpe_train(
         raise ValueError("merges must be >= 0")
     if min_pair_count < 1:
         raise ValueError("min_pair_count must be >= 1")
-    if strategy not in ("auto", "local", "perjob"):
-        raise ValueError(
-            f"strategy must be 'auto', 'local' or 'perjob', got {strategy!r}"
-        )
     spark = docs.sparkSession
-    if strategy in ("auto", "local"):
+    # persisted so a failed probe does not rerun the corpus scan + shuffle
+    wc_df = word_counts(docs, text_col).persist()
+    rows = collect_at_most(wc_df, BPE_LOCAL_MAX_WORDS)
+    if rows is not None:
+        wc_df.unpersist()
         # deterministic collect order not required (counts are sums and
         # the argmax is a global min over the dict), but sort anyway so
         # the encoded_vocab DataFrame's row order is reproducible
-        wc = sorted(
-            (r.word, int(r.cnt))
-            for r in word_counts(docs, text_col).collect()
-        )
+        wc = sorted((r.word, int(r.cnt)) for r in rows)
+        rows = None  # free the Row list (~0.35 GB per million words)
         merge_rows, seg = _bpe_train_local(
             wc, merges, min_pair_count, end_of_word
         )
@@ -256,15 +263,10 @@ def bpe_train(
             seg, "word string, cnt bigint, syms array<string>"
         )
         return merge_table, enc
-    w = (
-        word_counts(docs, text_col)
-        .select(
-            "word",
-            "cnt",
-            _initial_symbols("word", end_of_word).alias("syms"),
-        )
-        .localCheckpoint()
-    )
+    w = wc_df.select(
+        "word", "cnt", _initial_symbols("word", end_of_word).alias("syms")
+    ).localCheckpoint()
+    wc_df.unpersist()
     merge_rows: list[tuple] = []
     for rank in range(merges):
         # filter BEFORE building pair structs: sequence(1, size-1) steps

@@ -3,13 +3,15 @@
 This is the Spark realization of the whole kernel pipeline S1..R2
 (SURVEY.md §2.9): one logical stage, fused per row, executed
 partition-parallel on Python workers with Arrow transfer.  Per the input
-hint there is **no per-row Python UDF** — batches in, batches out.
+hint there is **no per-row Python UDF** — batches in, batches out; the
+batch harness is the shared one in :mod:`.rowmap` (``map_rows``).
 
 Scale design (north rule):
 - the kernel is closure-captured once per worker process (module import),
   not per row;
-- every row yields exactly one output row; failures become the ``error``
-  column — a bad page can never kill the job;
+- every row yields exactly one output row (``map_rows`` builds one per
+  input row); failures become the ``error`` column — a bad page can never
+  kill the job;
 - lineage/metrics ride along as columns (``partition_id``, ``html_bytes``,
   ``extract_ms``) and are aggregated into the per-partition manifest by
   plans/pipeline.py.
@@ -18,9 +20,8 @@ Scale design (north rule):
 from __future__ import annotations
 
 import time
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -36,6 +37,7 @@ from pyspark.sql.types import (
 from ..config import Configuration
 from ..kernel import extract as kernel_extract
 from ..sources.charset import sniff_decode
+from .rowmap import map_rows
 
 EXTRACT_SCHEMA = StructType([
     StructField("url", StringType(), True),
@@ -67,54 +69,31 @@ def make_extract_batches(
     ``carry``: input columns echoed through unchanged (e.g. warc_ts for
     streaming watermarks)."""
 
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract_row(url, raw) -> tuple:
+        nbytes = len(raw) if raw is not None else 0
+        cfg = config.with_overrides(original_url=url) if url else config
+        t0 = time.perf_counter()
+        if raw is None:
+            html = ""
+        elif isinstance(raw, (bytes, bytearray, memoryview)):
+            # charset sniff (BOM → strict-utf-8 trial → meta prescan →
+            # latin-1): crawl payloads carry no trustworthy encoding; a
+            # hard utf-8 decode garbles every legacy-encoded page.  Valid
+            # utf-8 input decodes exactly as before.
+            html, _enc = sniff_decode(bytes(raw))
+        else:
+            html = str(raw)
+        res = kernel_extract(html, cfg, url=url)
+        ms = (time.perf_counter() - t0) * 1000.0
         tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            out = {k.name: [] for k in EXTRACT_SCHEMA.fields}
-            urls = pdf["url"]
-            htmls = pdf["html"]
-            for i in range(len(pdf)):
-                url = urls.iat[i]
-                raw = htmls.iat[i]
-                nbytes = len(raw) if raw is not None else 0
-                cfg = config.with_overrides(original_url=url) if url else config
-                t0 = time.perf_counter()
-                if raw is None:
-                    res = kernel_extract("", cfg, url=url)
-                else:
-                    if isinstance(raw, (bytes, bytearray, memoryview)):
-                        # charset sniff (BOM → strict-utf-8 trial → meta
-                        # prescan → latin-1): crawl payloads carry no
-                        # trustworthy encoding; a hard utf-8 decode garbles
-                        # every legacy-encoded page.  Valid utf-8 input
-                        # decodes exactly as before.
-                        html, _enc = sniff_decode(bytes(raw))
-                    else:
-                        html = str(raw)
-                    res = kernel_extract(html, cfg, url=url)
-                ms = (time.perf_counter() - t0) * 1000.0
-                out["url"].append(url)
-                out["title"].append(res.title)
-                out["byline"].append(res.byline)
-                out["content_html"].append(res.content_html)
-                out["extracted_text"].append(res.extracted_text)
-                out["excerpt"].append(res.excerpt)
-                out["image"].append(res.image)
-                out["images"].append(res.images)
-                out["site_name"].append(res.site_name)
-                out["direction"].append(res.direction)
-                out["error"].append(res.error)
-                out["attempts"].append(res.attempts)
-                out["partition_id"].append(pid)
-                out["html_bytes"].append(nbytes)
-                out["extract_ms"].append(ms)
-            result = pd.DataFrame(out)
-            for c in carry:
-                result[c] = pdf[c].values
-            yield result
+        return (
+            url, res.title, res.byline, res.content_html, res.extracted_text,
+            res.excerpt, res.image, res.images, res.site_name, res.direction,
+            res.error, res.attempts, tc.partitionId() if tc is not None else -1,
+            nbytes, ms,
+        )
 
-    return extract_batches
+    return map_rows(extract_row, EXTRACT_SCHEMA, ("url", "html"), carry)
 
 
 def extract_operator(

@@ -49,9 +49,7 @@ approximate it — same guard as similarity._bucketed_cosine_pairs).
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -64,6 +62,7 @@ from pyspark.sql.types import (
 
 from .dedup import connected_components
 from .multimodal import DEFAULT_MAX_PIXELS, decode_image
+from .rowmap import map_rows
 from .similarity import split_overcap_buckets
 
 try:  # numpy is baked into the env, but keep the import honest
@@ -154,34 +153,28 @@ def compute_phash(
     filtered scan-side; decode failures follow the feature extractor's
     error-column contract (never a task kill)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {f.name: [] for f in PHASH_SCHEMA.fields}
-            for i in range(len(pdf)):
-                raw = pdf["payload"].iat[i]
-                raw = bytes(raw) if raw is not None else b""
-                err = None
-                width = height = ph = None
-                try:
-                    width, height, pix = decode_image(
-                        raw, fake=fake_decode, max_pixels=max_pixels
-                    )
-                    ph = phash64(width, height, pix, hash_size=hash_size)
-                except NotImplementedError:
-                    err = "decoder_unavailable"
-                except Exception as e:  # noqa: BLE001 — error-column contract
-                    err = f"decode_error: {e}"
-                out["media_id"].append(pdf["media_id"].iat[i])
-                out["phash"].append(ph)
-                out["width"].append(width)
-                out["height"].append(height)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
+    def phash_row(media_id, raw) -> tuple:
+        raw = bytes(raw) if raw is not None else b""
+        err = None
+        width = height = ph = None
+        try:
+            width, height, pix = decode_image(
+                raw, fake=fake_decode, max_pixels=max_pixels
+            )
+            ph = phash64(width, height, pix, hash_size=hash_size)
+        except NotImplementedError:
+            err = "decoder_unavailable"
+        except Exception as e:  # noqa: BLE001 — error-column contract
+            err = f"decode_error: {e}"
+        return media_id, ph, width, height, err
 
     return (
         media.filter(F.col("kind") == "image")
         .select("media_id", "payload")
-        .mapInPandas(batches, schema=PHASH_SCHEMA)
+        .mapInPandas(
+            map_rows(phash_row, PHASH_SCHEMA, ("media_id", "payload")),
+            schema=PHASH_SCHEMA,
+        )
     )
 
 

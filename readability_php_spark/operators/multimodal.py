@@ -29,8 +29,6 @@ import struct
 import zlib
 from typing import Iterator
 
-import pandas as pd
-
 try:  # numpy is environment-standard here; guarded like image_dedup's
     import numpy as _np
 except ImportError:  # pragma: no cover
@@ -47,6 +45,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .rowmap import flat_map_rows, map_rows
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
@@ -914,42 +914,28 @@ def sample_video_frames(
     (same auditability contract as the image/audio extractors — decode
     coverage stays measurable downstream)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {f.name: [] for f in FRAME_SCHEMA.fields}
-            for i in range(len(pdf)):
-                if pdf["kind"].iat[i] != "video":
-                    continue
-                raw = pdf["payload"].iat[i]
-                raw = bytes(raw) if raw is not None else b""
-                try:
-                    frames = sample_frames(raw, every_n, fake=fake)
-                except NotImplementedError as e:
-                    out["media_id"].append(pdf["media_id"].iat[i])
-                    out["frame_idx"].append(None)
-                    out["frame"].append(None)
-                    out["error"].append(f"decoder_unavailable: {e}")
-                    continue
-                if not frames:
-                    # a structurally valid container with no sampleable
-                    # video frames (zero-frame AVI, or frames on a stream
-                    # the walker doesn't match) must NOT silently vanish:
-                    # one null-frame row keeps the per-row auditability
-                    # contract (every media row accounted for downstream)
-                    out["media_id"].append(pdf["media_id"].iat[i])
-                    out["frame_idx"].append(None)
-                    out["frame"].append(None)
-                    out["error"].append("no_frames")
-                    continue
-                for idx, frame in enumerate(frames):
-                    out["media_id"].append(pdf["media_id"].iat[i])
-                    out["frame_idx"].append(idx)
-                    out["frame"].append(frame)
-                    out["error"].append(None)
-            yield pd.DataFrame(out)
+    def frame_rows(media_id, kind, raw) -> Iterator[tuple]:
+        if kind != "video":
+            return
+        raw = bytes(raw) if raw is not None else b""
+        try:
+            frames = sample_frames(raw, every_n, fake=fake)
+        except NotImplementedError as e:
+            yield media_id, None, None, f"decoder_unavailable: {e}"
+            return
+        if not frames:
+            # a structurally valid container with no sampleable video
+            # frames (zero-frame AVI, or frames on a stream the walker
+            # doesn't match) must NOT silently vanish: one null-frame row
+            # keeps the per-row auditability contract (every media row
+            # accounted for downstream)
+            yield media_id, None, None, "no_frames"
+        for idx, frame in enumerate(frames):
+            yield media_id, idx, frame, None
 
     return media.select("media_id", "kind", "payload").mapInPandas(
-        batches, schema=FRAME_SCHEMA
+        flat_map_rows(frame_rows, FRAME_SCHEMA, ("media_id", "kind", "payload")),
+        schema=FRAME_SCHEMA,
     )
 
 
@@ -976,32 +962,25 @@ def resize_images(
     pipeline runs before batching images to a vision encoder.  One output
     row per input image row; non-image rows are filtered scan-side."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {f.name: [] for f in RESIZE_SCHEMA.fields}
-            for i in range(len(pdf)):
-                raw = pdf["payload"].iat[i]
-                raw = bytes(raw) if raw is not None else b""
-                err = resized = None
-                try:
-                    resized = resize_image(
-                        raw, width, height, max_pixels=max_pixels
-                    )
-                except NotImplementedError:
-                    err = "decoder_unavailable"
-                except Exception as e:  # noqa: BLE001 — error-column contract
-                    err = f"resize_error: {e}"
-                out["media_id"].append(pdf["media_id"].iat[i])
-                out["payload"].append(resized)
-                out["width"].append(width if resized is not None else None)
-                out["height"].append(height if resized is not None else None)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
+    def resize_row(media_id, raw) -> tuple:
+        raw = bytes(raw) if raw is not None else b""
+        err = resized = None
+        try:
+            resized = resize_image(raw, width, height, max_pixels=max_pixels)
+        except NotImplementedError:
+            err = "decoder_unavailable"
+        except Exception as e:  # noqa: BLE001 — error-column contract
+            err = f"resize_error: {e}"
+        ok = resized is not None
+        return media_id, resized, width if ok else None, height if ok else None, err
 
     return (
         media.filter(F.col("kind") == "image")
         .select("media_id", "payload")
-        .mapInPandas(batches, schema=RESIZE_SCHEMA)
+        .mapInPandas(
+            map_rows(resize_row, RESIZE_SCHEMA, ("media_id", "payload")),
+            schema=RESIZE_SCHEMA,
+        )
     )
 
 
@@ -1015,75 +994,64 @@ def extract_media_features(
     batches.  Mirrors the HTML extractor's batch discipline: one output row
     per input row, failures as an ``error`` column."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {f.name: [] for f in FEATURE_SCHEMA.fields}
-            for i in range(len(pdf)):
-                mid = pdf["media_id"].iat[i]
-                kind = pdf["kind"].iat[i]
-                raw = pdf["payload"].iat[i]
-                raw = bytes(raw) if raw is not None else b""
-                err = None
-                width = height = pixel_sum = duration_s = None
+    def features_row(mid, kind, raw) -> tuple:
+        raw = bytes(raw) if raw is not None else b""
+        err = None
+        width = height = pixel_sum = duration_s = None
+        try:
+            if kind == "image":
+                width, height, pix = decode_image(
+                    raw, fake=fake_decode, max_pixels=max_pixels
+                )
+                pixel_sum = sum(pix)
+            elif kind == "video":
+                # header-only dims/duration for the three dominant
+                # web containers (same tier as the progressive-JPEG
+                # dims fallback); pixel/frame decode stays ffmpeg-
+                # gated for MP4/WebM and lives in sample_video_
+                # frames for AVI, so EVERY video row carries
+                # pixels_unavailable — unknown containers raise and
+                # surface decoder_unavailable like images do, so
+                # `error IS NULL` never reads garbage as cleaner
+                # than parsed metadata
+                if raw[4:8] == b"ftyp":
+                    width, height, dur = mp4_video_metadata(raw)
+                elif raw[:4] == b"\x1a\x45\xdf\xa3":
+                    width, height, dur = webm_video_metadata(raw)
+                elif raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
+                    width, height, dur = avi_video_metadata(raw)
+                else:
+                    raise NotImplementedError(
+                        "unknown video container (MP4/WebM/AVI headers supported)"
+                    )
+                duration_s = dur
+                err = "pixels_unavailable"
+        except NotImplementedError:
+            err = "decoder_unavailable"
+            if raw[:3] == JPEG_MAGIC:
+                # pixels need a real JPEG decoder, but the frame
+                # header still yields the curation-relevant dims
                 try:
-                    if kind == "image":
-                        width, height, pix = decode_image(
-                            raw, fake=fake_decode, max_pixels=max_pixels
-                        )
-                        pixel_sum = sum(pix)
-                    elif kind == "video":
-                        # header-only dims/duration for the three dominant
-                        # web containers (same tier as the progressive-JPEG
-                        # dims fallback); pixel/frame decode stays ffmpeg-
-                        # gated for MP4/WebM and lives in sample_video_
-                        # frames for AVI, so EVERY video row carries
-                        # pixels_unavailable — unknown containers raise and
-                        # surface decoder_unavailable like images do, so
-                        # `error IS NULL` never reads garbage as cleaner
-                        # than parsed metadata
-                        if raw[4:8] == b"ftyp":
-                            width, height, dur = mp4_video_metadata(raw)
-                        elif raw[:4] == b"\x1a\x45\xdf\xa3":
-                            width, height, dur = webm_video_metadata(raw)
-                        elif raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
-                            width, height, dur = avi_video_metadata(raw)
-                        else:
-                            raise NotImplementedError(
-                                "unknown video container (MP4/WebM/AVI headers supported)"
-                            )
-                        duration_s = dur
-                        err = "pixels_unavailable"
-                except NotImplementedError:
-                    err = "decoder_unavailable"
-                    if raw[:3] == JPEG_MAGIC:
-                        # pixels need a real JPEG decoder, but the frame
-                        # header still yields the curation-relevant dims
-                        try:
-                            width, height = jpeg_dimensions(raw)
-                            err = "pixels_unavailable"
-                        except Exception as e:  # noqa: BLE001 — same
-                            # error-column contract as the outer handler
-                            err = f"decode_error: {e}"
-                except Exception as e:  # noqa: BLE001 — contract: ANY
-                    # decode failure becomes the row's error column, never
-                    # a task kill (zlib.error from a corrupt IDAT and
-                    # IndexError from truncated segments are not
-                    # ValueError subclasses)
+                    width, height = jpeg_dimensions(raw)
+                    err = "pixels_unavailable"
+                except Exception as e:  # noqa: BLE001 — same
+                    # error-column contract as the outer handler
                     err = f"decode_error: {e}"
-                out["media_id"].append(mid)
-                out["kind"].append(kind)
-                out["n_bytes"].append(len(raw))
-                out["fingerprint"].append(hashlib.md5(raw).hexdigest())
-                out["features"].append(_byte_histogram_features(raw))
-                out["width"].append(width)
-                out["height"].append(height)
-                out["pixel_sum"].append(pixel_sum)
-                out["duration_s"].append(duration_s)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
+        except Exception as e:  # noqa: BLE001 — contract: ANY
+            # decode failure becomes the row's error column, never
+            # a task kill (zlib.error from a corrupt IDAT and
+            # IndexError from truncated segments are not
+            # ValueError subclasses)
+            err = f"decode_error: {e}"
+        return (
+            mid, kind, len(raw), hashlib.md5(raw).hexdigest(),
+            _byte_histogram_features(raw), width, height, pixel_sum,
+            duration_s, err,
+        )
 
     return media.select("media_id", "kind", "payload").mapInPandas(
-        batches, schema=FEATURE_SCHEMA
+        map_rows(features_row, FEATURE_SCHEMA, ("media_id", "kind", "payload")),
+        schema=FEATURE_SCHEMA,
     )
 
 

@@ -11,6 +11,7 @@ entirely from this repo's operators:
       └─ exact_dedup               # md5-fingerprint keep-lowest-url
       └─ fuzzy_dedup               # MinHash-LSH → Jaccard verify →
       │                            #   connected components → keep-min-url
+      │                            #   (exact_fuzzy_dedup: checkpoint between)
       └─ line_dedup                # cross-corpus boilerplate lines
       └─ c4/gopher rules (opt)     # published heuristic filter sets
       └─ substring dedup (opt)     # Lee et al. ExactSubstr span removal
@@ -58,6 +59,26 @@ from ..operators.sampling import hash_split
 from ..operators.scrub import scrub_pii
 from ..operators.text_analysis import token_count
 from .pipeline import _try_read_parquet, tune_session_for_extraction
+
+
+def exact_fuzzy_dedup(
+    docs: DataFrame, *, id_col: str, num_hashes: int, bands: int, threshold: float
+) -> DataFrame:
+    """The text dedup chain: exact fingerprint dedup → ``localCheckpoint``
+    → MinHash-LSH fuzzy dedup.  The eager checkpoint materializes the
+    exact-dedup output once, so the fuzzy chain's four consumers (LSH
+    input, both Jaccard sides, the final anti-join) stop replaying the
+    upstream subtree per job.  The checkpoint cuts lineage: losing an
+    executor during fuzzy dedup fails the job instead of recomputing
+    its blocks.  ``run_training_prep`` and the ``training_prep_fuzzy``
+    gate both call this."""
+    return fuzzy_dedup(
+        exact_dedup(docs, id_col=id_col).localCheckpoint(),
+        id_col=id_col,
+        num_hashes=num_hashes,
+        bands=bands,
+        threshold=threshold,
+    )
 
 
 @dataclass
@@ -331,15 +352,16 @@ def run_training_prep(
         # to one kept copy first — both so shared lines aren't deleted from
         # every copy, and so byte-identical mega-groups never reach the LSH
         # buckets' quadratic-in-bucket pair expansion
-        unique_docs = exact_dedup(scrubbed, id_col="url")
         if fuzzy:
-            unique_docs = fuzzy_dedup(
-                unique_docs,
+            unique_docs = exact_fuzzy_dedup(
+                scrubbed,
                 id_col="url",
                 num_hashes=fuzzy_num_hashes,
                 bands=fuzzy_bands,
                 threshold=fuzzy_threshold,
             )
+        else:
+            unique_docs = exact_dedup(scrubbed, id_col="url")
         cleaned = line_dedup(
             unique_docs, text_col="text", id_col="url", min_count=line_min_count
         ).join(unique_docs.select("url", "lang"), "url")

@@ -31,7 +31,6 @@ import re
 import zlib
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     DoubleType,
@@ -40,6 +39,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..operators.rowmap import flat_map_rows
 
 PDF_SPANS_SCHEMA = StructType(
     [
@@ -230,20 +231,16 @@ def read_pdf_directory(
         .select("path", "content")
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-file yield: bounds RSS at one document's spans (see the
-        # WARC reader's identical discipline)
-        for pdf in it:
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                rows = [
-                    (path_, page, x, y, text)
-                    for page, x, y, text in extract_pdf_spans(bytes(content))
-                ]
-                yield pd.DataFrame(
-                    rows, columns=["url", "page", "x", "y", "text"]
-                )
+    def span_rows(path_, content) -> Iterator[tuple]:
+        for page, x, y, text in extract_pdf_spans(bytes(content)):
+            yield path_, page, x, y, text
 
-    return files.mapInPandas(batches, schema=PDF_SPANS_SCHEMA)
+    # per-file yield (flat_map_rows): bounds RSS at one document's spans,
+    # the WARC reader's discipline
+    return files.mapInPandas(
+        flat_map_rows(span_rows, PDF_SPANS_SCHEMA, ("path", "content")),
+        schema=PDF_SPANS_SCHEMA,
+    )
 
 
 def write_pdf(path: str, pages: list[list[tuple[float, float, str]]]) -> None:

@@ -21,10 +21,9 @@ import gzip
 import io
 from typing import Iterator, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from ..operators.rowmap import flat_map_rows
 from .pages import PAGES_SCHEMA
 
 _CRLF = b"\r\n"
@@ -99,31 +98,26 @@ def warc_records_to_rows(raw: bytes) -> Iterator[tuple]:
         yield (url, _warc_ts(headers.get("warc-date")), html, None, None)
 
 
-def read_warc_directory(spark: SparkSession, path: str, glob: str = "*.warc*") -> DataFrame:
-    """Directory of WARC files → pages DataFrame (one task per archive)."""
+def _read_archives(spark: SparkSession, path: str, glob: str, records_to_rows) -> DataFrame:
+    """Directory of archives → pages DataFrame, one task per archive and
+    one yielded frame per archive: accumulating a whole input batch of
+    ~1 GB archives' decompressed records unbounds executor memory, while
+    per-archive frames cap RSS at one archive."""
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
         .load(path)
-        .select("path", "content")
+        .select("content")
+    )
+    return files.mapInPandas(
+        flat_map_rows(records_to_rows, PAGES_SCHEMA, ("content",)),
+        schema=PAGES_SCHEMA,
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one yielded frame PER ARCHIVE: accumulating a whole input batch
-        # of ~1 GB archives' decompressed records in one dict unbounds
-        # executor memory; per-archive yield caps RSS at one archive
-        for pdf in it:
-            for raw in pdf["content"]:
-                rows = {f.name: [] for f in PAGES_SCHEMA.fields}
-                for url, ts, html, text, lang in warc_records_to_rows(bytes(raw)):
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(ts)
-                    rows["html"].append(html)
-                    rows["text"].append(text)
-                    rows["lang"].append(lang)
-                yield pd.DataFrame(rows)
 
-    return files.mapInPandas(batches, schema=PAGES_SCHEMA)
+def read_warc_directory(spark: SparkSession, path: str, glob: str = "*.warc*") -> DataFrame:
+    """Directory of WARC files → pages DataFrame (one task per archive)."""
+    return _read_archives(spark, path, glob, warc_records_to_rows)
 
 
 # --- test/bench support: deterministic WARC writer --------------------------
@@ -173,28 +167,7 @@ def wet_records_to_rows(raw: bytes) -> Iterator[tuple]:
 def read_wet_directory(spark: SparkSession, path: str, glob: str = "*.wet*") -> DataFrame:
     """Directory of WET files → pages DataFrame with ``text`` populated and
     ``html`` null (one task per archive, same sharding shape as WARC)."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-archive yield: see read_warc_directory (bounds RSS at one
-        # archive's records instead of a whole input batch's)
-        for pdf in it:
-            for raw in pdf["content"]:
-                rows = {f.name: [] for f in PAGES_SCHEMA.fields}
-                for url, ts, html, text, lang in wet_records_to_rows(bytes(raw)):
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(ts)
-                    rows["html"].append(html)
-                    rows["text"].append(text)
-                    rows["lang"].append(lang)
-                yield pd.DataFrame(rows)
-
-    return files.mapInPandas(batches, schema=PAGES_SCHEMA)
+    return _read_archives(spark, path, glob, wet_records_to_rows)
 
 
 def write_wet(path: str, docs: list[tuple[str, str, str]], compress: bool = False) -> None:

@@ -51,6 +51,52 @@ def _ts(us: int) -> datetime.datetime:
     return datetime.datetime.fromtimestamp(us / _US, tz=datetime.timezone.utc).replace(tzinfo=None)
 
 
+_COLUMNS = ["user_id", "session_start", "session_end", "events", "value_sum", "closed"]
+
+
+def _row(user_id, start_us, last_us, n, vsum, closed) -> tuple:
+    return (user_id, _ts(start_us), _ts(last_us), n, vsum, closed)
+
+
+def _session_step(
+    key: Tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState, gap_us: int
+) -> "tuple[list, tuple | None]":
+    """The gap-split transition both sessionizers share.  On a timeout the
+    stored session closes and the state goes; otherwise this call's events,
+    in time order, extend the stored session, and a gap of more than
+    ``gap_us`` closes it and opens the next one.  Returns the closed rows
+    and the open session ``(user_id, start_us, last_us, n, value_sum)``,
+    now stored in ``state`` (None after a timeout)."""
+    (user_id,) = key
+    rows = []
+    if state.hasTimedOut:
+        if state.exists:
+            rows.append(_row(user_id, *state.get, "gap"))
+        state.remove()
+        return rows, None
+    events = pd.concat(list(pdfs))
+    ts_us = (events["ts"].astype("int64") // 1000).tolist()  # ns → µs
+    vals = events["value"].tolist()
+    order = sorted(range(len(ts_us)), key=lambda i: ts_us[i])
+    if state.exists:
+        start_us, last_us, n, vsum = state.get
+    else:
+        start_us, last_us, n, vsum = None, 0, 0, 0.0
+    for i in order:
+        t, v = ts_us[i], float(vals[i])
+        if start_us is None:
+            start_us, last_us, n, vsum = t, t, 1, v
+        elif t - last_us > gap_us:
+            rows.append(_row(user_id, start_us, last_us, n, vsum, "gap"))
+            start_us, last_us, n, vsum = t, t, 1, v
+        else:
+            last_us = max(last_us, t)
+            n += 1
+            vsum += v
+    state.update((start_us, last_us, n, vsum))
+    return rows, (user_id, start_us, last_us, n, vsum)
+
+
 def make_sessionizer(gap_seconds: int = 1800):
     gap_us = gap_seconds * _US
 
@@ -59,42 +105,12 @@ def make_sessionizer(gap_seconds: int = 1800):
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        rows = []
-        if state.hasTimedOut:
-            if state.exists:
-                start_us, last_us, n, vsum = state.get
-                rows.append((user_id, _ts(start_us), _ts(last_us), n, vsum, "gap"))
-            state.remove()
-        else:
-            events = pd.concat(list(pdfs))
-            ts_us = (events["ts"].astype("int64") // 1000).tolist()  # ns → µs
-            vals = events["value"].tolist()
-            order = sorted(range(len(ts_us)), key=lambda i: ts_us[i])
-            if state.exists:
-                start_us, last_us, n, vsum = state.get
-            else:
-                start_us, last_us, n, vsum = None, 0, 0, 0.0
-            for i in order:
-                t, v = ts_us[i], float(vals[i])
-                if start_us is None:
-                    start_us, last_us, n, vsum = t, t, 1, v
-                elif t - last_us > gap_us:
-                    rows.append((user_id, _ts(start_us), _ts(last_us), n, vsum, "gap"))
-                    start_us, last_us, n, vsum = t, t, 1, v
-                else:
-                    last_us = max(last_us, t)
-                    n += 1
-                    vsum += v
-            state.update((start_us, last_us, n, vsum))
+        rows, open_session = _session_step(key, pdfs, state, gap_us)
+        if open_session is not None:
             state.setTimeoutDuration(gap_seconds * 1000)
             # emit the open session's running view (outputMode=update)
-            rows.append((user_id, _ts(start_us), _ts(last_us), n, vsum, "open"))
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "session_start", "session_end", "events",
-                     "value_sum", "closed"],
-        )
+            rows.append(_row(*open_session, "open"))
+        yield pd.DataFrame(rows, columns=_COLUMNS)
 
     return fn
 
@@ -173,41 +189,11 @@ def make_event_time_sessionizer(gap_seconds: int = 1800):
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        rows = []
-        if state.hasTimedOut:
-            if state.exists:
-                start_us, last_us, n, vsum = state.get
-                rows.append((user_id, _ts(start_us), _ts(last_us), n, vsum, "gap"))
-            state.remove()
-        else:
-            events = pd.concat(list(pdfs))
-            ts_us = (events["ts"].astype("int64") // 1000).tolist()
-            vals = events["value"].tolist()
-            order = sorted(range(len(ts_us)), key=lambda i: ts_us[i])
-            if state.exists:
-                start_us, last_us, n, vsum = state.get
-            else:
-                start_us, last_us, n, vsum = None, 0, 0, 0.0
-            for i in order:
-                t, v = ts_us[i], float(vals[i])
-                if start_us is None:
-                    start_us, last_us, n, vsum = t, t, 1, v
-                elif t - last_us > gap_us:
-                    rows.append((user_id, _ts(start_us), _ts(last_us), n, vsum, "gap"))
-                    start_us, last_us, n, vsum = t, t, 1, v
-                else:
-                    last_us = max(last_us, t)
-                    n += 1
-                    vsum += v
-            state.update((start_us, last_us, n, vsum))
+        rows, open_session = _session_step(key, pdfs, state, gap_us)
+        if open_session is not None:
             # close when event time (watermark) passes last + gap
-            state.setTimeoutTimestamp((last_us + gap_us) // 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "session_start", "session_end", "events",
-                     "value_sum", "closed"],
-        )
+            state.setTimeoutTimestamp((open_session[2] + gap_us) // 1000)
+        yield pd.DataFrame(rows, columns=_COLUMNS)
 
     return fn
 

@@ -56,14 +56,11 @@ def _ref_word_counts(texts):
     return wc
 
 
-def _check(spark, texts, merges, min_pair_count=2, strategy="auto"):
+def _check(spark, texts, merges, min_pair_count=2):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
     )
-    table, enc = bpe_train(
-        docs, merges=merges, min_pair_count=min_pair_count,
-        strategy=strategy,
-    )
+    table, enc = bpe_train(docs, merges=merges, min_pair_count=min_pair_count)
     got_table = [
         (r.rank, r.left, r.right, r.pair_count) for r in table.collect()
     ]
@@ -252,15 +249,18 @@ def test_bpe_argmax_tiebreak_is_byte_order(spark):
     assert [(l, r) for _, l, r, _ in ref_table] == [rows[0], rows[1]]
 
 
-def test_bpe_strategies_identical_trajectory(spark):
+def test_bpe_strategies_identical_trajectory(spark, monkeypatch):
     """The driver-local incremental-update trainer (the default — one
     Spark job, constant driver round-trips) and the fully-distributed
-    per-merge loop produce the IDENTICAL merge table and encoded vocab —
-    on a crafted corpus covering runs/overlaps/ties and on random text.
-    Both are also checked against the flat pure-Python reference via
-    _check below (which recomputes pair counts from scratch each
-    iteration, so agreement also validates the local trainer's
-    incremental pair-count delta updates)."""
+    per-merge loop (forced by a zero local cap, or by a cap of 1 that
+    the size probe overflows) produce the IDENTICAL
+    merge table and encoded vocab — on a crafted corpus covering
+    runs/overlaps/ties and on random text.  Both are also checked against
+    the flat pure-Python reference via _check below (which recomputes
+    pair counts afresh each iteration, so agreement also validates
+    the local trainer's incremental pair-count delta updates)."""
+    from readability_php_spark.operators import bpe
+
     rng = random.Random(7)
     rand_texts = [
         " ".join(
@@ -275,24 +275,21 @@ def test_bpe_strategies_identical_trajectory(spark):
         (["a b", "", "  "], 5, 2),  # early stop / degenerate docs
     ]:
         got = {}
-        for strat in ("local", "perjob"):
-            _check(spark, texts, merges, min_pair_count=mpc, strategy=strat)
+        # cap 1: the size probe runs, overflows, and the per-merge loop
+        # reuses the probed (persisted) word counts
+        for loop, cap in (
+            ("local", bpe.BPE_LOCAL_MAX_WORDS), ("perjob", 0), ("probed", 1)
+        ):
+            monkeypatch.setattr(bpe, "BPE_LOCAL_MAX_WORDS", cap)
+            _check(spark, texts, merges, min_pair_count=mpc)
             docs = spark.createDataFrame(
                 [(i, t) for i, t in enumerate(texts)],
                 "doc_id int, text string",
             )
-            table, enc = bpe_train(
-                docs, merges=merges, min_pair_count=mpc, strategy=strat
-            )
-            got[strat] = (
+            table, enc = bpe_train(docs, merges=merges, min_pair_count=mpc)
+            got[loop] = (
                 [(r.rank, r.left, r.right, r.pair_count)
                  for r in table.collect()],
                 {r.word: (r.cnt, list(r.syms)) for r in enc.collect()},
             )
-        assert got["local"] == got["perjob"]
-
-
-def test_bpe_rejects_bad_strategy(spark):
-    docs = spark.createDataFrame([(0, "x y")], "doc_id int, text string")
-    with pytest.raises(ValueError):
-        bpe_train(docs, merges=1, strategy="turbo")
+        assert got["local"] == got["perjob"] == got["probed"]
